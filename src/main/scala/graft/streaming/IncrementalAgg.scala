@@ -15,9 +15,8 @@ import org.apache.spark.sql.types._
   *
   * Unlike IncrementalDedup's append-only signature state, a matview must
   * REWRITE rows (merged groups change), so each upsert writes a fresh
-  * state version directory and repoints a _CURRENT marker — the
-  * write-new-then-swap idiom every table format (Delta/Iceberg) formalizes;
-  * readers never observe a half-written state. At 100 TB the state table
+  * state version behind a [[VersionPointer]] swap — the
+  * write-new-then-swap idiom every table format (Delta/Iceberg) formalizes. At 100 TB the state table
   * is bucketed on the group key so the merge join is co-located; only the
   * micro-batch shuffles.
   */
@@ -30,32 +29,15 @@ object IncrementalAgg {
     StructField("n", LongType),
     StructField("sum_value", DecimalType(38, 2))))
 
-  /** _CURRENT carries `v<N>[:batch=<id>]` — the same replay-protection
-    * pointer format as IncrementalStats (the tag was ported here when the
-    * serve row landed: a once-per-dir state build must be crash-safe to
-    * re-run, which needs committed-batch skips).
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one — the
     * build-completeness probe the serve row uses.
     */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    VersionPointer.committedBatch(s, base)
 
   /** Read the current state (empty frame before the first batch). */
   def readState(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(stateSchema).parquet(s"$base/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    VersionPointer.grain(s, base, stateSchema)(v => s"$base/v$v")
 
   private def partials(batch: DataFrame): DataFrame =
     batch.groupBy("event_type")
@@ -65,9 +47,8 @@ object IncrementalAgg {
   /** Merge one micro-batch of events into the state and swap versions.
     * Returns the new state. The full-outer merge touches only |keys|
     * rows; the batch side is the only thing aggregated from raw rows.
-    * A batch whose id is ≤ the committed `:batch=` tag is a crash replay
-    * and is skipped — re-merging the same partials would double-count
-    * (exactly-once is what makes state ≡ one-shot an identity).
+    * A replayed batch id is skipped ([[VersionPointer]]): exactly-once
+    * is what makes state ≡ one-shot an identity.
     *
     * INGEST CONTRACT: each event must arrive at most once across batch
     * IDS (exactly-once per event — what a checkpointed foreachBatch
@@ -78,29 +59,23 @@ object IncrementalAgg {
     * (same stance as IncrementalIndex.processBatch).
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id)))
-      return readState(s, base)
-    val merged = readState(s, base).select(
-        col("event_type"), col("n").as("n1"), col("sum_value").as("s1"))
-      .join(partials(batch).select(
-        col("event_type").as("et2"), col("n").as("n2"), col("sum_value").as("s2")),
-        col("event_type") === col("et2"), "full_outer")
-      .select(
-        coalesce(col("event_type"), col("et2")).as("event_type"),
-        (coalesce(col("n1"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"),
-        (coalesce(col("s1"), lit(0).cast(DecimalType(38, 2)))
-          + coalesce(col("s2"), lit(0).cast(DecimalType(38, 2))))
-          .cast(DecimalType(38, 2)).as("sum_value"))
-      // materialize BEFORE touching the directory tree the plan reads from
-      .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
-    merged
-  }
+      batchId: Option[Long] = None): DataFrame =
+    VersionPointer.commit(s, base, batchId) { next =>
+      val merged = readState(s, base).select(
+          col("event_type"), col("n").as("n1"), col("sum_value").as("s1"))
+        .join(partials(batch).select(
+          col("event_type").as("et2"), col("n").as("n2"), col("sum_value").as("s2")),
+          col("event_type") === col("et2"), "full_outer")
+        .select(
+          coalesce(col("event_type"), col("et2")).as("event_type"),
+          (coalesce(col("n1"), lit(0L)) + coalesce(col("n2"), lit(0L))).as("n"),
+          (coalesce(col("s1"), lit(0).cast(DecimalType(38, 2)))
+            + coalesce(col("s2"), lit(0).cast(DecimalType(38, 2))))
+            .cast(DecimalType(38, 2)).as("sum_value"))
+        // materialize BEFORE touching the directory tree the plan reads from
+        .localCheckpoint()
+      Seq(s"$base/v$next" -> merged)
+    }.fold(readState(s, base))(_.head)
 
   /** Attach the incremental aggregate to an events stream via foreachBatch;
     * the batch id is threaded into the committed pointer for crash-replay

@@ -7,10 +7,9 @@ import org.apache.spark.sql.types._
 /** Streaming CDC apply — the continuously-maintained form of
   * q_cdc_upsert: a persistent keyed snapshot absorbs each micro-batch of
   * upsert/delete change rows through ONE full-outer merge on the primary
-  * key, writing a fresh state version and repointing _CURRENT atomically
-  * (the IncrementalAgg write-new-then-swap idiom — readers never observe
-  * a half-applied batch, the property a transactional table format
-  * provides and plain parquet must construct).
+  * key, writing a fresh state version behind a [[VersionPointer]] swap —
+  * readers never observe a half-applied batch, the property a
+  * transactional table format provides and plain parquet must construct.
   *
   * Replay invariant: applying change batches sequentially equals applying
   * their union at once, PROVIDED all changes for a key ride in the same
@@ -30,30 +29,13 @@ object IncrementalCdc {
     StructField("o_custkey", LongType),
     StructField("o_totalprice", DoubleType)))
 
-  /** _CURRENT carries `v<N>[:batch=<id>]` — the IncrementalAgg/Stats
-    * replay-protection pointer (r12: a crashed-and-retried foreachBatch
-    * must not re-apply a batch of changes — a replayed D/U merge against
-    * the post-merge state silently diverges from the one-shot apply).
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    VersionPointer.committedBatch(s, base)
 
   /** Read the current snapshot (empty before initialization). */
   def readState(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(stateSchema).parquet(s"$base/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    VersionPointer.grain(s, base, stateSchema)(v => s"$base/v$v")
 
   /** Apply one micro-batch of change rows
     * (o_orderkey, op ∈ {U, D}, c_custkey, new_price) to the snapshot and
@@ -62,32 +44,26 @@ object IncrementalCdc {
     * full-outer merge against the state.
     */
   def processBatch(s: SparkSession, changes: DataFrame, base: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id)))
-      return readState(s, base)
-    val perKey = changes.groupBy("o_orderkey").agg(
-      max(when(col("op") === "D", 1).otherwise(0)).as("has_d"),
-      // at most one U per key per batch under the key-partitioned feed;
-      // max over the single struct is a deterministic pick either way
-      max(when(col("op") === "U",
-        struct(col("c_custkey"), col("new_price")))).as("u"))
-    val merged = readState(s, base)
-      .join(perKey.select(col("o_orderkey").as("k"), col("has_d"), col("u")),
-        col("o_orderkey") === col("k"), "full_outer")
-      .filter(coalesce(col("has_d"), lit(0)) === 0)
-      .select(
-        coalesce(col("o_orderkey"), col("k")).as("o_orderkey"),
-        coalesce(col("u.c_custkey"), col("o_custkey")).as("o_custkey"),
-        coalesce(col("u.new_price"), col("o_totalprice")).as("o_totalprice"))
-      // materialize BEFORE touching the directory tree the plan reads from
-      .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
-    merged
-  }
+      batchId: Option[Long] = None): DataFrame =
+    VersionPointer.commit(s, base, batchId) { next =>
+      val perKey = changes.groupBy("o_orderkey").agg(
+        max(when(col("op") === "D", 1).otherwise(0)).as("has_d"),
+        // at most one U per key per batch under the key-partitioned feed;
+        // max over the single struct is a deterministic pick either way
+        max(when(col("op") === "U",
+          struct(col("c_custkey"), col("new_price")))).as("u"))
+      val merged = readState(s, base)
+        .join(perKey.select(col("o_orderkey").as("k"), col("has_d"), col("u")),
+          col("o_orderkey") === col("k"), "full_outer")
+        .filter(coalesce(col("has_d"), lit(0)) === 0)
+        .select(
+          coalesce(col("o_orderkey"), col("k")).as("o_orderkey"),
+          coalesce(col("u.c_custkey"), col("o_custkey")).as("o_custkey"),
+          coalesce(col("u.new_price"), col("o_totalprice")).as("o_totalprice"))
+        // materialize BEFORE touching the directory tree the plan reads from
+        .localCheckpoint()
+      Seq(s"$base/v$next" -> merged)
+    }.fold(readState(s, base))(_.head)
 
   /** Attach the CDC apply to a change-row stream via foreachBatch.
     *

@@ -32,9 +32,8 @@ import org.apache.spark.sql.types._
   * of labels IS the global min member id — so after any batch split the
   * state equals the one-shot CC over everything seen, exactly
   * (IncrementalComponentsSpec asserts row equality, plus the
-  * only-coarsens invariant per batch). State versioning follows
-  * IncrementalAgg's write-new-then-swap _CURRENT discipline: readers
-  * never observe a half-written label table.
+  * only-coarsens invariant per batch). State protocol:
+  * [[VersionPointer]].
   *
   * At 100 TB: the label table shuffles once per batch on node_id (and
   * would be bucketed on it); everything batch-sized broadcasts. Edges
@@ -50,68 +49,49 @@ object IncrementalComponents {
     StructField("node_id", LongType),
     StructField("component", LongType)))
 
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    VersionPointer.committedBatch(s, base)
 
   /** Read the current label table (empty before the first batch). */
   def readState(s: SparkSession, base: String): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(stateSchema).parquet(s"$base/labels/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    VersionPointer.grain(s, base, stateSchema)(v => s"$base/labels/v$v")
 
   /** Absorb one batch: `batchNodes` is (node_id), `batchEdges` is
     * undirected pairs (a, b) touching at least one batch node. Returns
     * the new full label table (node_id, component = min reachable id).
-    * Replay-protected via the pointer's batch tag (a re-delivered
-    * micro-batch is a no-op; a manual no-id call carries the committed
-    * tag forward — the IncrementalDrift discipline).
+    * Replay-protected ([[VersionPointer]]).
     */
   def processBatch(s: SparkSession, batchNodes: DataFrame, batchEdges: DataFrame,
-      base: String, batchId: Option[Long] = None): DataFrame = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return readState(s, base)
-    val st = readState(s, base)
-    val fresh = batchNodes.select(col("node_id")).distinct()
-      .join(st.select(col("node_id")), Seq("node_id"), "left_anti")
-      .select(col("node_id"), col("node_id").as("component"))
-    val labels = st.unionByName(fresh).localCheckpoint()
-    // contract batch edges to the label graph; self-loops (both endpoints
-    // already in one component) carry no new connectivity and drop here
-    val la = labels.select(col("node_id").as("a"), col("component").as("ca"))
-    val lb = labels.select(col("node_id").as("b"), col("component").as("cb"))
-    val contracted = batchEdges.select(col("a"), col("b"))
-      .join(la, Seq("a")).join(lb, Seq("b"))
-      .filter(col("ca") =!= col("cb"))
-      .select(least(col("ca"), col("cb")).as("doc_id1"),
-        greatest(col("ca"), col("cb")).as("doc_id2"))
-      .distinct()
-      .localCheckpoint()
-    val touched = contracted.select(col("doc_id1").as("doc_id"))
-      .union(contracted.select(col("doc_id2").as("doc_id"))).distinct()
-    val merged = DedupQueries.connectedComponents(touched, contracted)
-      .select(col("doc_id").as("component"), col("cluster_id").as("merged"))
-    val updated = labels
-      .join(broadcast(merged), Seq("component"), "left")
-      .select(col("node_id"),
-        coalesce(col("merged"), col("component")).as("component"))
-      .localCheckpoint()
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    updated.write.mode("overwrite").parquet(s"$base/labels/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
-    updated
-  }
+      base: String, batchId: Option[Long] = None): DataFrame =
+    VersionPointer.commit(s, base, batchId) { next =>
+      val st = readState(s, base)
+      val fresh = batchNodes.select(col("node_id")).distinct()
+        .join(st.select(col("node_id")), Seq("node_id"), "left_anti")
+        .select(col("node_id"), col("node_id").as("component"))
+      val labels = st.unionByName(fresh).localCheckpoint()
+      // contract batch edges to the label graph; self-loops (both endpoints
+      // already in one component) carry no new connectivity and drop here
+      val la = labels.select(col("node_id").as("a"), col("component").as("ca"))
+      val lb = labels.select(col("node_id").as("b"), col("component").as("cb"))
+      val contracted = batchEdges.select(col("a"), col("b"))
+        .join(la, Seq("a")).join(lb, Seq("b"))
+        .filter(col("ca") =!= col("cb"))
+        .select(least(col("ca"), col("cb")).as("doc_id1"),
+          greatest(col("ca"), col("cb")).as("doc_id2"))
+        .distinct()
+        .localCheckpoint()
+      val touched = contracted.select(col("doc_id1").as("doc_id"))
+        .union(contracted.select(col("doc_id2").as("doc_id"))).distinct()
+      val merged = DedupQueries.connectedComponents(touched, contracted)
+        .select(col("doc_id").as("component"), col("cluster_id").as("merged"))
+      val updated = labels
+        .join(broadcast(merged), Seq("component"), "left")
+        .select(col("node_id"),
+          coalesce(col("merged"), col("component")).as("component"))
+        .localCheckpoint()
+      Seq(s"$base/labels/v$next" -> updated)
+    }.fold(readState(s, base))(_.head)
 
   /** Attach to an edge stream whose rows are (a, b) pairs; nodes are the
     * endpoints (first sight of an id creates its singleton label), so a

@@ -26,17 +26,12 @@ import org.apache.spark.sql.types._
   * equality including the jaccard scores, and q_serve_neardup_state puts
   * the build→serve loop through the driver's oracle gate every round.
   *
-  * State protocol (r12): the IncrementalIndex/IncrementalSpan log-record
-  * CAS discipline replaced the original bare `mode("append")` writes,
-  * which had no replay protection — a crashed-and-retried foreachBatch
-  * would double-land signatures AND re-emit pairs. Now every committed
-  * state is ONE exclusive-create record `log/v<N>` naming the live
-  * segment set (each segment = writer-unique dirs `banded/<seg>`,
-  * `hashed/<seg>`, `pairs/<seg>`) and the committed batch id; a batch at
-  * or below the committed id is a crash replay and is skipped; a lost
-  * publish race rebases — the pure-batch signature/hash segments are
-  * reused, the state-dependent pair emission recomputes against the
-  * winner's state.
+  * State protocol (r12): [[RecordLog]] records naming the live segment
+  * set (each segment = writer-unique dirs `banded/<seg>`, `hashed/<seg>`,
+  * `pairs/<seg>`) and the committed batch id; a replayed batch id is
+  * skipped; a lost publish race rebases — the pure-batch signature/hash
+  * segments are reused, the state-dependent pair emission recomputes
+  * against the winner's state.
   *
   * Segments auto-compact every [[AutoCompactSegs]] batches (r15 —
   * the Index/Span/Winnow discipline with deferred-GC tombstones and
@@ -65,71 +60,23 @@ object IncrementalDedup {
     * record, reclaimed at the NEXT compaction's entry.
     */
   private[graft] case class DedupState(version: Long, segs: Seq[String],
-      batch: Option[Long], tombs: Seq[String] = Seq.empty)
+      batch: Option[Long], tombs: Seq[String] = Seq.empty) extends RecordLog.Record
 
-  private val EmptyState = DedupState(-1L, Seq.empty, None)
+  private[graft] val records = new RecordLog.Of[DedupState](
+    DedupState(-1L, Seq.empty, None),
+    st => RecordLog.body("segs" -> RecordLog.list(st.segs), "batch" -> RecordLog.num(st.batch),
+      "tombs" -> RecordLog.list(st.tombs)),
+    (v, f) => DedupState(v, f.list("segs"), f.num("batch"), f.list("tombs")))
 
-  private def recordBody(st: DedupState): String =
-    s"segs=${st.segs.mkString(",")};batch=${st.batch.fold("-")(_.toString)}" +
-      s";tombs=${st.tombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): DedupState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    DedupState(version,
-      kv.get("segs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("tombs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
-  }
-
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[DedupState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
-
-  /** Latest committed state: `_CURRENT` hint (or log listing) then walk
-    * forward — the IncrementalIndex discipline; a stale hint is harmless.
-    */
-  private[graft] def currentState(s: SparkSession, base: String): DedupState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).toLong).filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
+  /** Latest committed state ([[RecordLog]] resolution). */
+  private[graft] def currentState(s: SparkSession, base: String): DedupState =
+    records.current(s, base)
 
   /** The committed micro-batch id — the serve row's build-completeness
     * probe.
     */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     currentState(s, base).batch
-
-  private def publish(s: SparkSession, base: String, st: DedupState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER
-    // the exclusive rename landed reports false with the target existing
-    // — our record body embeds writer-unique (uid-bearing) segment
-    // names, so a byte-identical readback means WE won. Without this the
-    // replay branch would dropSeg() LIVE family dirs and a compaction
-    // abort would dropC() the LIVE compacted dirs.
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
 
   private def emptyDf(s: SparkSession, schema: StructType): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -208,7 +155,7 @@ object IncrementalDedup {
       newPairs.write.mode("overwrite").parquet(s"$base/pairs/$segName")
       val next = DedupState(st.version + 1, st.segs :+ segName,
         batchId.orElse(st.batch), st.tombs)
-      if (publish(s, base, next)) {
+      if (records.publish(s, base, next)) {
         // bound state growth (the Winnow discipline): without folding,
         // every serve read and every batch's state-side scan opens one
         // parquet dir per batch ever ingested. The fold runs AFTER the
@@ -311,7 +258,7 @@ object IncrementalDedup {
       val next = DedupState(st.version + 1,
         (cName +: st.segs.filterNot(folded.contains)).distinct, st.batch,
         folded.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
+      if (records.publish(s, base, next)) committed = true
       else st = currentState(s, base)
     }
     // (prior-generation tombs were reclaimed at entry)

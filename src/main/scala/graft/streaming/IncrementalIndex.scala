@@ -15,18 +15,11 @@ import org.apache.spark.sql.types._
   * IncrementalIndexSpec replays the fixture to assert). No batch ever
   * re-tokenizes history.
   *
-  * State protocol (round 9 — the PackStore publishWith discipline applied
-  * to the index, closing the crash-atomicity and concurrency gaps of the
-  * listing-driven r8 layout):
+  * State protocol: [[RecordLog]] records carrying the stats dir, the
+  * LIVE posting-segment list, and the last committed batch id.
   *
-  *  - every committed state is ONE record file `log/v<N>`, published by
-  *    EXCLUSIVE CREATE (GraftFs.writeSmallFileExclusive — the CAS). The
-  *    record carries the stats dir, the LIVE posting-segment list, and
-  *    the last committed batch id. Segment liveness is defined by the
-  *    record, never by directory listing: a crash anywhere leaves only
-  *    unreferenced orphan dirs, which readers cannot double-count.
   *  - ingest (processBatch) writes its segment + merged stats under the
-  *    attempted version, then CASes `log/v<N+1>`. A lost race (a
+  *    attempted version, then CASes the next record. A lost race (a
   *    concurrent compaction committed first) rebases: re-read the winner,
   *    splice this batch's segment into ITS segment list, retry at the
   *    next version. Stats partials stay valid across a compaction rebase
@@ -38,10 +31,6 @@ import org.apache.spark.sql.types._
   *    interleaved append during compact loses nothing, by mechanism.
   *    Input dirs are deleted only AFTER the CAS lands; a crash between
   *    publish and delete leaves orphans, not duplicates.
-  *  - `_CURRENT` is a fast-path HINT (latest version number), updated
-  *    after each commit; readers verify it against the log and walk
-  *    forward if stale, so a torn or lagging hint can never surface a
-  *    wrong state — the log record is the single source of truth.
   *
   * Scale shape: the postings family is the big side and is never
   * rewritten — batches cost O(batch). The stats table is
@@ -67,7 +56,7 @@ object IncrementalIndex {
     StructField("doc_id", LongType),
     StructField("tf", LongType)))
 
-  /** One committed index state: the `log/v<version>` record. `segs` are
+  /** One committed index state: one [[RecordLog]] record. `segs` are
     * dir names under `postings/`; `statsDir` is relative to `base`.
     * `ndocs` is the CUMULATIVE ingested document count (r11 advice: a
     * NULL-text document lands zero postings, so a count reconstructed
@@ -86,70 +75,19 @@ object IncrementalIndex {
     */
   private[graft] case class IndexState(version: Long, statsDir: Option[String],
       segs: Seq[String], batch: Option[Long], ndocs: Option[Long] = None,
-      tombs: Seq[String] = Seq.empty)
+      tombs: Seq[String] = Seq.empty) extends RecordLog.Record
 
-  private val EmptyState = IndexState(-1L, None, Seq.empty, None)
+  private[graft] val records = new RecordLog.Of[IndexState](
+    IndexState(-1L, None, Seq.empty, None),
+    st => RecordLog.body("stats" -> st.statsDir.getOrElse(""), "segs" -> RecordLog.list(st.segs),
+      "batch" -> RecordLog.num(st.batch), "ndocs" -> RecordLog.num(st.ndocs),
+      "tombs" -> RecordLog.list(st.tombs)),
+    (v, f) => IndexState(v, f.text("stats"), f.list("segs"), f.num("batch"), f.num("ndocs"),
+      f.list("tombs")))
 
-  private def recordBody(st: IndexState): String =
-    s"stats=${st.statsDir.getOrElse("")};segs=${st.segs.mkString(",")};" +
-      s"batch=${st.batch.fold("-")(_.toString)};" +
-      s"ndocs=${st.ndocs.fold("-")(_.toString)};" +
-      s"tombs=${st.tombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): IndexState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    IndexState(version,
-      kv.get("stats").filter(_.nonEmpty),
-      kv.get("segs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("ndocs").filter(_ != "-").map(_.toLong),
-      kv.get("tombs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
-  }
-
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[IndexState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
-
-  /** Latest committed state: start from the `_CURRENT` hint (or the log
-    * listing when the hint is absent — first commit, or a crash before
-    * the first hint write) and walk forward until the last existing
-    * record. The walk makes a stale hint harmless at O(lag) exists-calls.
-    */
-  private[graft] def currentState(s: SparkSession, base: String): IndexState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).toLong).filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
-
-  private def publish(s: SparkSession, base: String, st: IndexState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER
-    // the exclusive rename landed reports false with the target existing
-    // — a byte-identical readback means WE won (compaction records carry
-    // a uid-bearing cName; batch records under the documented single-
-    // writer foreachBatch topology are ours at our version).
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
+  /** Latest committed state ([[RecordLog]] resolution). */
+  private[graft] def currentState(s: SparkSession, base: String): IndexState =
+    records.current(s, base)
 
   private def emptyDf(s: SparkSession, schema: StructType): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -274,7 +212,7 @@ object IncrementalIndex {
       }
       val next = IndexState(v, Some(statsName), st.segs :+ segName,
         batchId.orElse(st.batch), Some(baseDocs + batchDocs), st.tombs)
-      if (publish(s, base, next)) committed = true
+      if (records.publish(s, base, next)) committed = true
       else {
         st = currentState(s, base)
         if (batchId.exists(id => st.batch.exists(_ >= id))) return
@@ -474,7 +412,7 @@ object IncrementalIndex {
         (cName +: st.segs.filterNot(folded.contains)).distinct, st.batch,
         st.ndocs, // compaction rewrites segments, never the corpus census
         folded.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
+      if (records.publish(s, base, next)) committed = true
       else st = currentState(s, base)
     }
     // (prior-generation tombs were reclaimed at entry; appends cannot

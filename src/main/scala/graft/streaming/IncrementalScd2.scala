@@ -10,8 +10,7 @@ import org.apache.spark.sql.types._
   * physics: a CLOSED version never changes again, so closed versions
   * land APPEND-ONLY (one parquet segment per batch — the
   * IncrementalIndex posting discipline), while the bounded one-row-per-
-  * user CURRENT table is rewritten behind a _CURRENT version swap (the
-  * IncrementalAgg matview discipline). Per batch: seed each affected
+  * user CURRENT table is rewritten behind a [[VersionPointer]] swap. Per batch: seed each affected
   * user's open version in front of its batch events, run the SCD2
   * suppression window across the seam (a batch whose first change
   * equals the open version's value is suppressed — the cross-batch rule
@@ -30,42 +29,27 @@ object IncrementalScd2 {
     StructField("event_type", StringType),
     StructField("valid_from_us", LongType)))
 
-  /** _CURRENT carries `v<N>` or `v<N>:batch=<id>` (the IncrementalIndex
-    * / PackIngest replay discipline): a foreachBatch replay after a
-    * crash between the swap and the checkpoint commit is skipped, so a
-    * batch's versions never double-land.
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
+  private val closedSchema =
+    StructType(curSchema.fields :+ StructField("valid_to_us", LongType))
 
-  private def currentVersion(s: SparkSession, base: String): Option[String] =
-    currentPointer(s, base).map(_._1)
-
-  /** Open (current) versions, one row per user seen so far. */
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    VersionPointer.committedBatch(s, base)
 
+  /** Open (current) versions, one row per user seen so far. */
   def readCurrentTable(s: SparkSession, base: String): DataFrame =
-    currentVersion(s, base) match {
-      case Some(v) => s.read.schema(curSchema).parquet(s"$base/current/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema)
-    }
+    VersionPointer.grain(s, base, curSchema)(v => s"$base/current/v$v")
 
-  /** All closed versions (append-only segments). */
-  def readClosed(s: SparkSession, base: String): DataFrame = {
-    val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/closed")
-    if (!fs.exists(q)) s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(curSchema.fields :+ StructField("valid_to_us", LongType)))
-    else s.read.option("recursiveFileLookup", "true").parquet(s"$base/closed")
-  }
+  /** All closed versions: the append-only segments `closed/b0..b<N>` of
+    * the committed version N. A segment a failed batch wrote past the
+    * pointer stays invisible until its replay overwrites it.
+    */
+  def readClosed(s: SparkSession, base: String): DataFrame =
+    VersionPointer.read(s, base) match {
+      case Some(p) => s.read.schema(closedSchema)
+        .parquet((0L to p.version).map(n => s"$base/closed/b$n"): _*)
+      case None => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], closedSchema)
+    }
 
   /** The full dimension in q_cdc_scd2's output shape. */
   def readDimension(s: SparkSession, base: String): DataFrame =
@@ -78,42 +62,34 @@ object IncrementalScd2 {
       .orderBy("user_id", "valid_from_us", "event_type")
 
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): Unit = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return
-    val next = ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)
-    val cur = readCurrentTable(s, base).localCheckpoint()
-    val ev = batch.select(col("user_id"), col("event_id"), col("event_type"),
-      expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-        .as("ts_us"))
-    val affected = ev.select("user_id").distinct()
-    // open versions of affected users seed the suppression window; their
-    // pseudo event_id -1 sorts ahead of any real event at equal ts
-    val seed = cur.join(affected, "user_id")
-      .select(col("user_id"), lit(-1L).as("event_id"), col("event_type"),
-        col("valid_from_us").as("ts_us"))
-    val w = Window.partitionBy("user_id").orderBy(asc("ts_us"), asc("event_id"))
-    val kept = seed.unionByName(ev)
-      .withColumn("prev", lag("event_type", 1).over(w))
-      .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-      .withColumn("valid_to_us", lead("ts_us", 1).over(
-        Window.partitionBy("user_id").orderBy(asc("ts_us"), asc("event_id"))))
-      .localCheckpoint()
-    kept.filter(col("valid_to_us").isNotNull)
-      .select(col("user_id"), col("event_type"),
-        col("ts_us").as("valid_from_us"), col("valid_to_us"))
-      .write.mode("overwrite").parquet(s"$base/closed/b$next")
-    val newCur = kept.filter(col("valid_to_us").isNull)
-      .select(col("user_id"), col("event_type"), col("ts_us").as("valid_from_us"))
-    val untouched = cur.join(affected, Seq("user_id"), "left_anti")
-    newCur.unionByName(untouched).localCheckpoint()
-      .write.mode("overwrite").parquet(s"$base/current/v$next")
-    // a manual call WITHOUT a batch id carries the committed tag forward —
-    // dropping it would erase replay protection for the next crash-replay
-    // of an attach()-driven stream sharing this state
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v$next$tag")
-  }
+      batchId: Option[Long] = None): Unit =
+    VersionPointer.commit(s, base, batchId) { next =>
+      val cur = readCurrentTable(s, base).localCheckpoint()
+      val ev = batch.select(col("user_id"), col("event_id"), col("event_type"),
+        expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
+          .as("ts_us"))
+      val affected = ev.select("user_id").distinct()
+      // open versions of affected users seed the suppression window; their
+      // pseudo event_id -1 sorts ahead of any real event at equal ts
+      val seed = cur.join(affected, "user_id")
+        .select(col("user_id"), lit(-1L).as("event_id"), col("event_type"),
+          col("valid_from_us").as("ts_us"))
+      val w = Window.partitionBy("user_id").orderBy(asc("ts_us"), asc("event_id"))
+      val kept = seed.unionByName(ev)
+        .withColumn("prev", lag("event_type", 1).over(w))
+        .filter(col("prev").isNull || col("prev") =!= col("event_type"))
+        .withColumn("valid_to_us", lead("ts_us", 1).over(
+          Window.partitionBy("user_id").orderBy(asc("ts_us"), asc("event_id"))))
+        .localCheckpoint()
+      val closed = kept.filter(col("valid_to_us").isNotNull)
+        .select(col("user_id"), col("event_type"),
+          col("ts_us").as("valid_from_us"), col("valid_to_us"))
+      val newCur = kept.filter(col("valid_to_us").isNull)
+        .select(col("user_id"), col("event_type"), col("ts_us").as("valid_from_us"))
+      val untouched = cur.join(affected, Seq("user_id"), "left_anti")
+      Seq(s"$base/closed/b$next" -> closed,
+        s"$base/current/v$next" -> newCur.unionByName(untouched).localCheckpoint())
+    }: Unit
 
   /** Attach to an events stream via foreachBatch (replay-protected). */
   def attach(events: DataFrame, base: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

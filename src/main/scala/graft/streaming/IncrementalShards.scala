@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * running total, assigns shards by starting offset, and MERGES its
   * per-shard partials into the versioned manifest (sum/min/max are
   * associative, so a shard spanning a batch boundary merges exactly).
-  * Same write-new-then-swap state idiom as IncrementalAgg/IncrementalCdc;
-  * IncrementalShardsSpec pins final manifest ≡ the one-shot operator.
+  * State protocol: [[VersionPointer]]. IncrementalShardsSpec pins final
+  * manifest ≡ the one-shot operator.
   *
   * Scale: per batch the merge touches |shards| + |batch| rows; the
   * manifest is bytes/16 KiB rows — tiny relative to the data forever.
@@ -27,74 +27,48 @@ object IncrementalShards {
     StructField("n_bytes", LongType), StructField("n_tokens", LongType),
     StructField("first_doc", LongType), StructField("last_doc", LongType)))
 
-  /** _CURRENT carries `v<N>[:batch=<id>]` — the IncrementalAgg/Stats
-    * replay-protection pointer (r12: a replayed batch would double-count
-    * its bytes/tokens into the manifest AND shift every later offset).
-    */
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
-  private def currentVersion(s: SparkSession, base: String): Option[String] =
-    currentPointer(s, base).map(_._1)
-
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    VersionPointer.committedBatch(s, base)
 
   def readState(s: SparkSession, base: String): DataFrame =
-    currentVersion(s, base) match {
-      case Some(v) => s.read.schema(stateSchema).parquet(s"$base/$v")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    }
+    VersionPointer.grain(s, base, stateSchema)(v => s"$base/v$v")
 
-  /** Absorb one doc batch (doc_id, n_chars, text) into the manifest. A
-    * batch id at or below the committed tag is a crash replay and is
-    * skipped.
+  /** Absorb one doc batch (doc_id, n_chars, text) into the manifest;
+    * a replayed batch id is skipped.
     */
   def processBatch(s: SparkSession, docs: DataFrame, base: String,
-      batchId: Option[Long] = None): DataFrame = {
-    if (batchId.exists(id => committedBatch(s, base).exists(_ >= id)))
-      return readState(s, base)
-    val state = readState(s, base)
-    val baseOffset = state.agg(coalesce(sum("n_bytes"), lit(0L))).collect()(0).getLong(0)
-    val w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
-    val partials = docs
-      .select(col("doc_id"), col("n_chars"),
-        graft.functions.Tokenize.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("offset", lit(baseOffset) + sum("n_chars").over(w) - col("n_chars"))
-      .withColumn("shard_id", floor(col("offset") / ShardBytes))
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_bytes"),
-        sum("n_tokens").as("n_tokens"),
-        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
-    val merged = state.select(col("shard_id"), col("n_docs").as("d1"), col("n_bytes").as("b1"),
-        col("n_tokens").as("t1"), col("first_doc").as("f1"), col("last_doc").as("l1"))
-      .join(partials.select(col("shard_id").as("sid2"), col("n_docs").as("d2"),
-        col("n_bytes").as("b2"), col("n_tokens").as("t2"),
-        col("first_doc").as("f2"), col("last_doc").as("l2")),
-        col("shard_id") === col("sid2"), "full_outer")
-      .select(
-        coalesce(col("shard_id"), col("sid2")).as("shard_id"),
-        (coalesce(col("d1"), lit(0L)) + coalesce(col("d2"), lit(0L))).as("n_docs"),
-        (coalesce(col("b1"), lit(0L)) + coalesce(col("b2"), lit(0L))).as("n_bytes"),
-        (coalesce(col("t1"), lit(0L)) + coalesce(col("t2"), lit(0L))).as("n_tokens"),
-        least(coalesce(col("f1"), col("f2")), coalesce(col("f2"), col("f1"))).as("first_doc"),
-        greatest(coalesce(col("l1"), col("l2")), coalesce(col("l2"), col("l1"))).as("last_doc"))
-      // materialize BEFORE touching the directory tree the plan reads from
-      .localCheckpoint()
-    val ptr = currentPointer(s, base)
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
-    merged
-  }
+      batchId: Option[Long] = None): DataFrame =
+    VersionPointer.commit(s, base, batchId) { next =>
+      val state = readState(s, base)
+      val baseOffset = state.agg(coalesce(sum("n_bytes"), lit(0L))).collect()(0).getLong(0)
+      val w = W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, W.currentRow)
+      val partials = docs
+        .select(col("doc_id"), col("n_chars"),
+          graft.functions.Tokenize.tokenCount(col("text")).cast("long").as("n_tokens"))
+        .withColumn("offset", lit(baseOffset) + sum("n_chars").over(w) - col("n_chars"))
+        .withColumn("shard_id", floor(col("offset") / ShardBytes))
+        .groupBy("shard_id")
+        .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_bytes"),
+          sum("n_tokens").as("n_tokens"),
+          min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
+      val merged = state.select(col("shard_id"), col("n_docs").as("d1"), col("n_bytes").as("b1"),
+          col("n_tokens").as("t1"), col("first_doc").as("f1"), col("last_doc").as("l1"))
+        .join(partials.select(col("shard_id").as("sid2"), col("n_docs").as("d2"),
+          col("n_bytes").as("b2"), col("n_tokens").as("t2"),
+          col("first_doc").as("f2"), col("last_doc").as("l2")),
+          col("shard_id") === col("sid2"), "full_outer")
+        .select(
+          coalesce(col("shard_id"), col("sid2")).as("shard_id"),
+          (coalesce(col("d1"), lit(0L)) + coalesce(col("d2"), lit(0L))).as("n_docs"),
+          (coalesce(col("b1"), lit(0L)) + coalesce(col("b2"), lit(0L))).as("n_bytes"),
+          (coalesce(col("t1"), lit(0L)) + coalesce(col("t2"), lit(0L))).as("n_tokens"),
+          least(coalesce(col("f1"), col("f2")), coalesce(col("f2"), col("f1"))).as("first_doc"),
+          greatest(coalesce(col("l1"), col("l2")), coalesce(col("l2"), col("l1"))).as("last_doc"))
+        // materialize BEFORE touching the directory tree the plan reads from
+        .localCheckpoint()
+      Seq(s"$base/v$next" -> merged)
+    }.fold(readState(s, base))(_.head)
 
   /** Attach the manifest maintenance to a document stream via foreachBatch;
     * the batch id rides the committed pointer for crash-replay idempotence.
@@ -139,13 +113,9 @@ object IncrementalShards {
         sum("n_tokens").as("n_tokens"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
     val merged = kept.union(rebuilt).localCheckpoint()
-    val ptr = currentPointer(s, base)
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    merged.write.mode("overwrite").parquet(s"$base/$next")
-    // a repair is not a stream batch: carry the committed batch tag
-    // forward unchanged so replay protection survives the repair swap
-    val tag = ptr.flatMap(_._2).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
+    // a repair is not a stream batch: no id, so the committed tag carries
+    // forward and replay protection survives the repair swap
+    VersionPointer.commit(s, base, None)(next => Seq(s"$base/v$next" -> merged))
     merged
   }
 }

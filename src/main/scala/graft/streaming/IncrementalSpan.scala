@@ -22,18 +22,13 @@ import org.apache.spark.sql.types._
   * window-vocabulary-grain merge, and the corpus text is never
   * re-tokenized.
   *
-  * State protocol — the IncrementalIndex log-record CAS, ported verbatim
-  * (r11 advice: the old single-pointer swap let two concurrent ingests
-  * silently drop or tear a batch):
+  * State protocol: [[RecordLog]] records carrying the stats dir, the
+  * LIVE occ/docs segment lists, and the last committed batch id (r11
+  * advice: the old single-pointer swap let two concurrent ingests
+  * silently drop or tear a batch).
   *
-  *  - every committed state is ONE record file `log/v<N>`, published by
-  *    EXCLUSIVE CREATE (GraftFs.writeSmallFileExclusive — the CAS). The
-  *    record carries the stats dir, the LIVE occ/docs segment lists, and
-  *    the last committed batch id. Segment liveness is defined by the
-  *    record, never by listing or position: a crash anywhere leaves only
-  *    unreferenced orphan dirs, which readers cannot double-count.
   *  - ingest writes its occ/docs segments and merged stats under
-  *    WRITER-UNIQUE names, then CASes `log/v<N+1>`. A lost race rebases:
+  *    WRITER-UNIQUE names, then CASes the next record. A lost race rebases:
   *    re-read the winner, re-merge the stats partial against ITS stats,
   *    splice the batch segments into ITS lists, retry at the next
   *    version. The occ/docs segments are pure batch data — version-
@@ -48,8 +43,6 @@ import org.apache.spark.sql.types._
   *    swapping them in — the IncrementalIndex compactFrom discipline:
   *    writer-unique output dir, duplicate-compactor guard, rebase keeps
   *    interloper segments, inputs deleted only after the publish lands.
-  *  - `_CURRENT` is a fast-path HINT (latest version number), verified
-  *    against the log and walked forward when stale.
   *
   * Contract: each doc_id arrives exactly once across batches (corpus
   * ingest). Concurrent ingests and compactions are safe under the CAS;
@@ -66,7 +59,7 @@ object IncrementalSpan {
     StructField("gh", LongType), StructField("cnt", LongType),
     StructField("src", LongType)))
 
-  /** One committed span state: the `log/v<version>` record. `occSegs` /
+  /** One committed span state: one [[RecordLog]] record. `occSegs` /
     * `docSegs` are dir names under `occ/` / `docs/`; `statsDir` is
     * relative to `base`.
     */
@@ -79,68 +72,19 @@ object IncrementalSpan {
   private[graft] case class SpanState(version: Long, statsDir: Option[String],
       occSegs: Seq[String], docSegs: Seq[String], batch: Option[Long],
       occTombs: Seq[String] = Seq.empty, docTombs: Seq[String] = Seq.empty)
+      extends RecordLog.Record
 
-  private val EmptyState = SpanState(-1L, None, Seq.empty, Seq.empty, None)
+  private[graft] val records = new RecordLog.Of[SpanState](
+    SpanState(-1L, None, Seq.empty, Seq.empty, None),
+    st => RecordLog.body("stats" -> st.statsDir.getOrElse(""), "occ" -> RecordLog.list(st.occSegs),
+      "docs" -> RecordLog.list(st.docSegs), "batch" -> RecordLog.num(st.batch),
+      "tombocc" -> RecordLog.list(st.occTombs), "tombdocs" -> RecordLog.list(st.docTombs)),
+    (v, f) => SpanState(v, f.text("stats"), f.list("occ"), f.list("docs"), f.num("batch"),
+      f.list("tombocc"), f.list("tombdocs")))
 
-  private def recordBody(st: SpanState): String =
-    s"stats=${st.statsDir.getOrElse("")};occ=${st.occSegs.mkString(",")};" +
-      s"docs=${st.docSegs.mkString(",")};batch=${st.batch.fold("-")(_.toString)};" +
-      s"tombocc=${st.occTombs.mkString(",")};tombdocs=${st.docTombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): SpanState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    SpanState(version,
-      kv.get("stats").filter(_.nonEmpty),
-      kv.get("occ").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("docs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("tombocc").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("tombdocs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
-  }
-
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[SpanState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
-
-  /** Latest committed state: start from the `_CURRENT` hint (or the log
-    * listing when the hint is absent) and walk forward until the last
-    * existing record — a stale hint is harmless at O(lag) exists-calls.
-    */
-  private[graft] def currentState(s: SparkSession, base: String): SpanState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).takeWhile(_.isDigit).toLong)
-      .filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
-
-  private def publish(s: SparkSession, base: String, st: SpanState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER
-    // the exclusive rename landed reports false with the target existing
-    // — our record body embeds writer-unique (uid-bearing) segment/stats
-    // names, so a byte-identical readback means WE won.
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
+  /** Latest committed state ([[RecordLog]] resolution). */
+  private[graft] def currentState(s: SparkSession, base: String): SpanState =
+    records.current(s, base)
 
   /** Bounded stats growth (r11 advice): after a commit at version v, the
     * stats dir referenced by record v−2 is garbage UNLESS a surviving
@@ -150,9 +94,9 @@ object IncrementalSpan {
     */
   private def gcStats(s: SparkSession, base: String, committed: SpanState): Unit =
     try {
-      readRecord(s, base, committed.version - 2).flatMap(_.statsDir).foreach { old =>
+      records.read(s, base, committed.version - 2).flatMap(_.statsDir).foreach { old =>
         val keep = Seq(committed.version - 1, committed.version)
-          .flatMap(readRecord(s, base, _)).flatMap(_.statsDir)
+          .flatMap(records.read(s, base, _)).flatMap(_.statsDir)
         if (!keep.contains(old))
           graft.sources.GraftFs.deleteRecursively(s, s"$base/$old")
       }
@@ -244,7 +188,7 @@ object IncrementalSpan {
       val next = SpanState(v, Some(statsName), st.occSegs :+ occSeg,
         st.docSegs :+ docsSeg, batchId.orElse(st.batch),
         st.occTombs, st.docTombs)
-      if (publish(s, base, next)) { committed = true; gcStats(s, base, next) }
+      if (records.publish(s, base, next)) { committed = true; gcStats(s, base, next) }
       else {
         st = currentState(s, base)
         if (batchId.exists(id => st.batch.exists(_ >= id))) return
@@ -341,7 +285,7 @@ object IncrementalSpan {
         (cName +: st.docSegs.filterNot(foldedDocs.contains)).distinct,
         st.batch,
         foldedOcc.toSeq.sorted, foldedDocs.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
+      if (records.publish(s, base, next)) committed = true
       else st = currentState(s, base)
     }
     // (prior-generation tombs were reclaimed at entry; appends cannot

@@ -22,8 +22,7 @@ import org.apache.spark.sql.types._
   *     (EventQueries.rfmFromUsers) — bit-equal to one-shot. The serve
   *     pays the user-grain quintile windows, never an event re-scan.
   *
-  * State protocol: versioned tables behind the batch-tagged `_CURRENT`
-  * swap (the IncrementalDrift/Scd2 discipline — crash replays skipped).
+  * State protocol: versioned tables behind [[VersionPointer]].
   */
 object IncrementalTrend {
 
@@ -42,21 +41,9 @@ object IncrementalTrend {
     StructField("n_pairs", LongType), StructField("n", LongType),
     StructField("tie", LongType)))
 
-  private def currentPointer(s: SparkSession, base: String): Option[(String, Option[Long])] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT").map { c =>
-      c.trim.split(":batch=") match {
-        case Array(v, b) => (v, Some(b.toLong))
-        case Array(v) => (v, None)
-      }
-    }
-
   private def readOr(s: SparkSession, base: String, sub: String,
       schema: StructType): DataFrame =
-    currentPointer(s, base) match {
-      case Some((v, _)) => s.read.schema(schema).parquet(s"$base/$v/$sub")
-      case None =>
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    VersionPointer.grain(s, base, schema)(v => s"$base/v$v/$sub")
 
   /** Current hourly trend grain (empty before batch 0). */
   def readHourly(s: SparkSession, base: String): DataFrame =
@@ -163,143 +150,129 @@ object IncrementalTrend {
     * IncrementalIndex.processBatch).
     */
   def processBatch(s: SparkSession, batch: DataFrame, base: String,
-      batchId: Option[Long] = None): Unit = {
-    val ptr = currentPointer(s, base)
-    if (batchId.exists(id => ptr.flatMap(_._2).exists(_ >= id))) return
-    // Barrier budget (r17 — the maintainer's ~4.5 s/batch was almost
-    // entirely driver-sequenced tiny jobs): only frames that are BOTH
-    // multi-consumer AND non-trivial to recompute stay materialized (hP,
-    // hM, tOld, tNew, dVals, the merged outputs feeding two writes).
-    // hOld/valsOld are parquet reads — re-scanning per consumer is
-    // cheaper than a materialization job; hMinus is one broadcast
-    // anti-join over that scan, same story.
-    val hP = batch.groupBy(col("g").as("g2"), col("h").as("h2"))
-      .agg(sum("x").cast(LongType).as("x2")).localCheckpoint()
-    val hOld = readHourly(s, base)
-    val hM = hOld
-      .join(hP, col("g") === col("g2") && col("h") === col("h2"), "full_outer")
-      .select(coalesce(col("g"), col("g2")).as("g"),
-        coalesce(col("h"), col("h2")).as("h"),
-        (coalesce(col("x"), lit(0L)) + coalesce(col("x2"), lit(0L))).as("x"))
-      .localCheckpoint()
-    // slope-histogram maintenance: remove the pairs the touched cells'
-    // OLD values contributed, add the pairs their NEW values contribute
-    // — against the untouched remainder (hMinus) and among themselves.
-    // The pre/post touched cells ride in ONE tagged frame (r17): one
-    // materialization instead of two, and the tag is the fused delta
-    // weight pairHistDelta aggregates.
-    val touchedKeys = hP.select(col("g2"), col("h2"))
-    val tBoth = hM.join(touchedKeys,
-        col("g") === col("g2") && col("h") === col("h2"), "left_semi")
-      .withColumn("tag", lit(1L))
-      .unionByName(hOld.join(touchedKeys,
-        col("g") === col("g2") && col("h") === col("h2"), "left_semi")
-        .withColumn("tag", lit(-1L)))
-      .localCheckpoint()
-    val tNew = tBoth.filter(col("tag") === 1L).drop("tag")
-    val tOld = tBoth.filter(col("tag") === -1L).drop("tag")
-    val hMinus = hOld.join(touchedKeys,
-      col("g") === col("g2") && col("h") === col("h2"), "left_anti")
-    val negate = (d: DataFrame) => d.withColumn("t", -col("t"))
-    // the four pairHist delta joins are the batch's dominant compute
-    // (touched × history pair enumerations) and feed TWO consumers (the
-    // slope-histogram merge and the moments fold) — materialize their
-    // union ONCE (r17; previously each consumer re-ran all four joins)
-    val deltaAll = Seq(
-        pairHistDelta(tBoth, hMinus), // == pairHist(tNew, hMinus) − pairHist(tOld, hMinus)
-        pairHist(tNew, tNew, within = true),
-        negate(pairHist(tOld, tOld, within = true)))
-      .reduce(_ unionByName _)
-      .localCheckpoint()
-    val slopesM = readSlopes(s, base).unionByName(deltaAll)
-      .groupBy("g", "slope_q", "sgn").agg(sum("t").cast(LongType).as("t"))
-      .filter(col("t") =!= 0L)
-      .localCheckpoint()
-    // moments maintenance (r14): S and n_pairs fold from the SAME four
-    // histogram delta frames; the cell-count and tie-correction deltas
-    // come from the touched cells' value moves against the maintained
-    // per-(g, x) value census — all touched-sized work, so serve reads a
-    // #series-row moments table instead of re-aggregating the full grain
-    val dHist = deltaAll
-      .groupBy("g").agg(sum(col("sgn") * col("t")).cast(LongType).as("ds"),
-        sum("t").cast(LongType).as("dp"))
-    val dVals = tNew.select(col("g"), col("x"), lit(1L).as("dc"))
-      .unionByName(tOld.select(col("g"), col("x"), lit(-1L).as("dc")))
-      .groupBy("g", "x").agg(sum("dc").cast(LongType).as("dc"))
-      .filter(col("dc") =!= 0L)
-      .localCheckpoint()
-    val valsOld = readVals(s, base)
-    // tie delta per affected (g, x): f(c + dc) − f(c), f(c) = c(c−1)(2c+5)
-    def fTie(c: org.apache.spark.sql.Column) =
-      c * (c - lit(1L)) * (lit(2L) * c + lit(5L))
-    val affected = dVals.join(
-        valsOld.select(col("g").as("g3"), col("x").as("x3"), col("c")),
-        col("g") === col("g3") && col("x") === col("x3"), "left")
-      .select(col("g"), coalesce(col("c"), lit(0L)).as("c"), col("dc"))
-    val dMom = affected
-      .groupBy("g").agg(
-        sum(fTie(col("c") + col("dc")) - fTie(col("c"))).cast(LongType).as("dtie"),
-        sum("dc").cast(LongType).as("dn"))
-      .join(dHist.select(col("g").as("g4"), col("ds"), col("dp")),
-        col("g") === col("g4"), "full_outer")
-      .select(coalesce(col("g"), col("g4")).as("gd"),
-        coalesce(col("ds"), lit(0L)).as("ds"), coalesce(col("dp"), lit(0L)).as("dp"),
-        coalesce(col("dtie"), lit(0L)).as("dtie"), coalesce(col("dn"), lit(0L)).as("dn"))
-    val momentsM = readMoments(s, base)
-      .join(dMom, col("g") === col("gd"), "full_outer")
-      .select(coalesce(col("g"), col("gd")).as("g"),
-        (coalesce(col("s"), lit(0L)) + coalesce(col("ds"), lit(0L))).as("s"),
-        (coalesce(col("n_pairs"), lit(0L)) + coalesce(col("dp"), lit(0L))).as("n_pairs"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-        (coalesce(col("tie"), lit(0L)) + coalesce(col("dtie"), lit(0L))).as("tie"))
-    val valsM = valsOld
-      .join(dVals.select(col("g").as("g5"), col("x").as("x5"), col("dc")),
-        col("g") === col("g5") && col("x") === col("x5"), "full_outer")
-      .select(coalesce(col("g"), col("g5")).as("g"),
-        coalesce(col("x"), col("x5")).as("x"),
-        (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
-      .filter(col("c") =!= 0L)
-    val uP = batch.groupBy(col("user_id").as("u2"))
-      .agg(max("ts_us").as("l2"), count(lit(1)).as("f2"),
-        sum("m").cast(LongType).as("m2"))
-    val uM = readUsers(s, base)
-      .join(uP, col("user_id") === col("u2"), "full_outer")
-      .select(coalesce(col("user_id"), col("u2")).as("user_id"),
-        greatest(coalesce(col("last_us"), lit(Long.MinValue)),
-          coalesce(col("l2"), lit(Long.MinValue))).as("last_us"),
-        (coalesce(col("f"), lit(0L)) + coalesce(col("f2"), lit(0L))).as("f"),
-        (coalesce(col("m"), lit(0L)) + coalesce(col("m2"), lit(0L))).as("m"))
-    val next = s"v${ptr.map(_._1.drop(1).toLong + 1).getOrElse(0L)}"
-    // the six grain writes are INDEPENDENT jobs (slopes_cum derives from
-    // the materialized slopesM, not from the slopes parquet) — overlap
-    // them from a small thread pool (guide §2.6) instead of paying six
-    // sequential driver-scheduled write barriers; the version pointer
-    // swaps only after every write has committed, so readers still see
-    // old-or-new, never a mix. A failure in any write propagates and the
-    // pointer never swaps (the half-written generation dir is garbage,
-    // same as the sequential failure mode).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      () => hM.write.mode("overwrite").parquet(s"$base/$next/hourly"),
-      () => slopesM.write.mode("overwrite").parquet(s"$base/$next/slopes"),
-      // the cumulative Sen marginal is rewritten alongside the histogram
-      // it derives from — the window is paid HERE, with the grain work,
-      // so serve never sorts
-      () => graft.operators.TimeSeriesQueries.senCumFromSlopes(slopesM)
-        .write.mode("overwrite").parquet(s"$base/$next/slopes_cum"),
-      () => uM.write.mode("overwrite").parquet(s"$base/$next/users"),
-      () => valsM.write.mode("overwrite").parquet(s"$base/$next/vals"),
-      () => momentsM.write.mode("overwrite").parquet(s"$base/$next/moments"))
-    Await.result(Future.sequence(writes.map(w => Future(w()))), Duration.Inf)
-    val tag = batchId.orElse(ptr.flatMap(_._2)).fold("")(id => s":batch=$id")
-    graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"$next$tag")
-  }
+      batchId: Option[Long] = None): Unit =
+    VersionPointer.commit(s, base, batchId) { next =>
+      // Barrier budget (r17 — the maintainer's ~4.5 s/batch was almost
+      // entirely driver-sequenced tiny jobs): only frames that are BOTH
+      // multi-consumer AND non-trivial to recompute stay materialized (hP,
+      // hM, tOld, tNew, dVals, the merged outputs feeding two writes).
+      // hOld/valsOld are parquet reads — re-scanning per consumer is
+      // cheaper than a materialization job; hMinus is one broadcast
+      // anti-join over that scan, same story.
+      val hP = batch.groupBy(col("g").as("g2"), col("h").as("h2"))
+        .agg(sum("x").cast(LongType).as("x2")).localCheckpoint()
+      val hOld = readHourly(s, base)
+      val hM = hOld
+        .join(hP, col("g") === col("g2") && col("h") === col("h2"), "full_outer")
+        .select(coalesce(col("g"), col("g2")).as("g"),
+          coalesce(col("h"), col("h2")).as("h"),
+          (coalesce(col("x"), lit(0L)) + coalesce(col("x2"), lit(0L))).as("x"))
+        .localCheckpoint()
+      // slope-histogram maintenance: remove the pairs the touched cells'
+      // OLD values contributed, add the pairs their NEW values contribute
+      // — against the untouched remainder (hMinus) and among themselves.
+      // The pre/post touched cells ride in ONE tagged frame (r17): one
+      // materialization instead of two, and the tag is the fused delta
+      // weight pairHistDelta aggregates.
+      val touchedKeys = hP.select(col("g2"), col("h2"))
+      val tBoth = hM.join(touchedKeys,
+          col("g") === col("g2") && col("h") === col("h2"), "left_semi")
+        .withColumn("tag", lit(1L))
+        .unionByName(hOld.join(touchedKeys,
+          col("g") === col("g2") && col("h") === col("h2"), "left_semi")
+          .withColumn("tag", lit(-1L)))
+        .localCheckpoint()
+      val tNew = tBoth.filter(col("tag") === 1L).drop("tag")
+      val tOld = tBoth.filter(col("tag") === -1L).drop("tag")
+      val hMinus = hOld.join(touchedKeys,
+        col("g") === col("g2") && col("h") === col("h2"), "left_anti")
+      val negate = (d: DataFrame) => d.withColumn("t", -col("t"))
+      // the four pairHist delta joins are the batch's dominant compute
+      // (touched × history pair enumerations) and feed TWO consumers (the
+      // slope-histogram merge and the moments fold) — materialize their
+      // union ONCE (r17; previously each consumer re-ran all four joins)
+      val deltaAll = Seq(
+          pairHistDelta(tBoth, hMinus), // == pairHist(tNew, hMinus) − pairHist(tOld, hMinus)
+          pairHist(tNew, tNew, within = true),
+          negate(pairHist(tOld, tOld, within = true)))
+        .reduce(_ unionByName _)
+        .localCheckpoint()
+      val slopesM = readSlopes(s, base).unionByName(deltaAll)
+        .groupBy("g", "slope_q", "sgn").agg(sum("t").cast(LongType).as("t"))
+        .filter(col("t") =!= 0L)
+        .localCheckpoint()
+      // moments maintenance (r14): S and n_pairs fold from the SAME four
+      // histogram delta frames; the cell-count and tie-correction deltas
+      // come from the touched cells' value moves against the maintained
+      // per-(g, x) value census — all touched-sized work, so serve reads a
+      // #series-row moments table instead of re-aggregating the full grain
+      val dHist = deltaAll
+        .groupBy("g").agg(sum(col("sgn") * col("t")).cast(LongType).as("ds"),
+          sum("t").cast(LongType).as("dp"))
+      val dVals = tNew.select(col("g"), col("x"), lit(1L).as("dc"))
+        .unionByName(tOld.select(col("g"), col("x"), lit(-1L).as("dc")))
+        .groupBy("g", "x").agg(sum("dc").cast(LongType).as("dc"))
+        .filter(col("dc") =!= 0L)
+        .localCheckpoint()
+      val valsOld = readVals(s, base)
+      // tie delta per affected (g, x): f(c + dc) − f(c), f(c) = c(c−1)(2c+5)
+      def fTie(c: org.apache.spark.sql.Column) =
+        c * (c - lit(1L)) * (lit(2L) * c + lit(5L))
+      val affected = dVals.join(
+          valsOld.select(col("g").as("g3"), col("x").as("x3"), col("c")),
+          col("g") === col("g3") && col("x") === col("x3"), "left")
+        .select(col("g"), coalesce(col("c"), lit(0L)).as("c"), col("dc"))
+      val dMom = affected
+        .groupBy("g").agg(
+          sum(fTie(col("c") + col("dc")) - fTie(col("c"))).cast(LongType).as("dtie"),
+          sum("dc").cast(LongType).as("dn"))
+        .join(dHist.select(col("g").as("g4"), col("ds"), col("dp")),
+          col("g") === col("g4"), "full_outer")
+        .select(coalesce(col("g"), col("g4")).as("gd"),
+          coalesce(col("ds"), lit(0L)).as("ds"), coalesce(col("dp"), lit(0L)).as("dp"),
+          coalesce(col("dtie"), lit(0L)).as("dtie"), coalesce(col("dn"), lit(0L)).as("dn"))
+      val momentsM = readMoments(s, base)
+        .join(dMom, col("g") === col("gd"), "full_outer")
+        .select(coalesce(col("g"), col("gd")).as("g"),
+          (coalesce(col("s"), lit(0L)) + coalesce(col("ds"), lit(0L))).as("s"),
+          (coalesce(col("n_pairs"), lit(0L)) + coalesce(col("dp"), lit(0L))).as("n_pairs"),
+          (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+          (coalesce(col("tie"), lit(0L)) + coalesce(col("dtie"), lit(0L))).as("tie"))
+      val valsM = valsOld
+        .join(dVals.select(col("g").as("g5"), col("x").as("x5"), col("dc")),
+          col("g") === col("g5") && col("x") === col("x5"), "full_outer")
+        .select(coalesce(col("g"), col("g5")).as("g"),
+          coalesce(col("x"), col("x5")).as("x"),
+          (coalesce(col("c"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("c"))
+        .filter(col("c") =!= 0L)
+      val uP = batch.groupBy(col("user_id").as("u2"))
+        .agg(max("ts_us").as("l2"), count(lit(1)).as("f2"),
+          sum("m").cast(LongType).as("m2"))
+      val uM = readUsers(s, base)
+        .join(uP, col("user_id") === col("u2"), "full_outer")
+        .select(coalesce(col("user_id"), col("u2")).as("user_id"),
+          greatest(coalesce(col("last_us"), lit(Long.MinValue)),
+            coalesce(col("l2"), lit(Long.MinValue))).as("last_us"),
+          (coalesce(col("f"), lit(0L)) + coalesce(col("f2"), lit(0L))).as("f"),
+          (coalesce(col("m"), lit(0L)) + coalesce(col("m2"), lit(0L))).as("m"))
+      // the six grain writes are INDEPENDENT jobs (slopes_cum derives from
+      // the materialized slopesM, not from the slopes parquet), so the
+      // commit overlaps them instead of paying six sequential
+      // driver-scheduled write barriers
+      Seq(s"$base/v$next/hourly" -> hM,
+        s"$base/v$next/slopes" -> slopesM,
+        // the cumulative Sen marginal is rewritten alongside the histogram
+        // it derives from — the window is paid HERE, with the grain work,
+        // so serve never sorts
+        s"$base/v$next/slopes_cum" -> graft.operators.TimeSeriesQueries.senCumFromSlopes(slopesM),
+        s"$base/v$next/users" -> uM,
+        s"$base/v$next/vals" -> valsM,
+        s"$base/v$next/moments" -> momentsM)
+    }: Unit
 
   /** The committed micro-batch id, if the writer threads one. */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
-    currentPointer(s, base).flatMap(_._2)
+    VersionPointer.committedBatch(s, base)
 
   /** MK/Sen trend from state — ≡ q_ts_trend one-shot, but nothing is
     * re-aggregated or SORTED at serve: S, n_pairs, n, and the tie

@@ -21,10 +21,9 @@ import org.apache.spark.sql.types._
   * `winnowPairsOn` by construction: same distinct fp relation, same
   * tail).
   *
-  * State protocol: the IncrementalDedup log-record CAS — one
-  * exclusive-create record `log/v<N>` naming the live segment set and
-  * committed batch id; replays at or below the committed id land
-  * nothing; a lost publish race re-CASes with the SAME segment (batch
+  * State protocol: [[RecordLog]] records naming the live segment set and
+  * committed batch id; a replayed batch id lands nothing; a lost
+  * publish race re-CASes with the SAME segment (batch
   * derivations are batch-pure, so no rebase recompute exists here).
   * Segments auto-compact every [[AutoCompactSegs]] batches
   * ([[compactSegments]]) so the record body and the serve read stay
@@ -42,69 +41,23 @@ object IncrementalWinnow {
     * parquet dir removed between plan resolution and scan execution.
     */
   private[graft] case class WinnowState(version: Long, segs: Seq[String],
-      batch: Option[Long], tombs: Seq[String] = Seq.empty)
+      batch: Option[Long], tombs: Seq[String] = Seq.empty) extends RecordLog.Record
 
-  private val EmptyState = WinnowState(-1L, Seq.empty, None)
+  private[graft] val records = new RecordLog.Of[WinnowState](
+    WinnowState(-1L, Seq.empty, None),
+    st => RecordLog.body("segs" -> RecordLog.list(st.segs), "batch" -> RecordLog.num(st.batch),
+      "tombs" -> RecordLog.list(st.tombs)),
+    (v, f) => WinnowState(v, f.list("segs"), f.num("batch"), f.list("tombs")))
 
-  private def recordBody(st: WinnowState): String =
-    s"segs=${st.segs.mkString(",")};batch=${st.batch.fold("-")(_.toString)}" +
-      s";tombs=${st.tombs.mkString(",")}"
-
-  private def parseRecord(version: Long, body: String): WinnowState = {
-    val kv = body.trim.split(";").map { f =>
-      val i = f.indexOf('=')
-      f.take(i) -> f.drop(i + 1)
-    }.toMap
-    WinnowState(version,
-      kv.get("segs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      kv.get("batch").filter(_ != "-").map(_.toLong),
-      kv.get("tombs").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty))
-  }
-
-  private def readRecord(s: SparkSession, base: String, v: Long): Option[WinnowState] =
-    graft.sources.GraftFs.readSmallFile(s, s"$base/log/v$v").map(parseRecord(v, _))
-
-  private[graft] def currentState(s: SparkSession, base: String): WinnowState = {
-    val hinted = graft.sources.GraftFs.readSmallFile(s, s"$base/_CURRENT")
-      .map(_.trim.drop(1).toLong).filter(v => readRecord(s, base, v).isDefined)
-    val start = hinted.orElse {
-      val (fs, q) = graft.sources.GraftFs.resolve(s, s"$base/log")
-      if (!fs.exists(q)) None
-      else fs.listStatus(q).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v")).map(_.drop(1).toLong).maxOption
-    }
-    start match {
-      case None => EmptyState
-      case Some(v0) =>
-        var st = readRecord(s, base, v0).getOrElse(EmptyState)
-        var next = readRecord(s, base, st.version + 1)
-        while (next.isDefined) { st = next.get; next = readRecord(s, base, st.version + 1) }
-        st
-    }
-  }
+  /** Latest committed state ([[RecordLog]] resolution). */
+  private[graft] def currentState(s: SparkSession, base: String): WinnowState =
+    records.current(s, base)
 
   /** The committed micro-batch id — the serve row's build-completeness
     * probe.
     */
   def committedBatch(s: SparkSession, base: String): Option[Long] =
     currentState(s, base).batch
-
-  private def publish(s: SparkSession, base: String, st: WinnowState): Boolean = {
-    val body = recordBody(st)
-    val ok0 = graft.sources.GraftFs.writeSmallFileExclusive(
-      s, s"$base/log/v${st.version}", body)
-    // ambiguous-CAS disambiguation (r15 review): an RPC failure AFTER the
-    // exclusive rename landed reports false with the target existing. Our
-    // record body embeds writer-unique (uid-bearing) segment names, so a
-    // byte-identical readback means WE won — without this, the caller's
-    // rebase would misread its own commit as a rival's (the replay branch
-    // would then delete LIVE segment dirs; a compaction abort would
-    // delete the LIVE compacted dir).
-    val ok = ok0 || graft.sources.GraftFs.readSmallFile(s, s"$base/log/v${st.version}")
-      .exists(_.trim == body.trim)
-    if (ok) graft.sources.GraftFs.writeSmallFileAtomic(s, s"$base/_CURRENT", s"v${st.version}")
-    ok
-  }
 
   /** The maintained fingerprint relation (doc_id, fp_hash) from ONE
     * committed record, GLOBALLY distinct: each segment is distinct
@@ -149,7 +102,7 @@ object IncrementalWinnow {
       }
       val next = WinnowState(st.version + 1, st.segs :+ segName,
         batchId.orElse(st.batch), st.tombs)
-      if (publish(s, base, next)) {
+      if (records.publish(s, base, next)) {
         // bound state growth: without compaction the record body and the
         // serve-time read (N tiny parquet dirs + a global distinct) grow
         // linearly with batch count over a long-running ingest. The fold
@@ -288,7 +241,7 @@ object IncrementalWinnow {
       val next = WinnowState(st.version + 1,
         (cName +: st.segs.filterNot(folded.contains)).distinct, st.batch,
         folded.toSeq.sorted)
-      if (publish(s, base, next)) committed = true
+      if (records.publish(s, base, next)) committed = true
       else st = currentState(s, base)
     }
     // (prior-generation tombs were reclaimed at entry; an interleaved

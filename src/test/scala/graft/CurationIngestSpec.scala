@@ -94,22 +94,27 @@ class CurationIngestSpec extends SparkTestBase with Matchers {
     }
   }
 
+  /** Shard 0's documents (doc_id < K). */
+  private def shard0 = Tables.documents(spark, sfTiny)
+    .withColumn("shard_id", floor(col("doc_id") / K))
+    .filter(col("shard_id") === 0)
+    .select("shard_id", "doc_id", "text", "lang")
+
+  /** `docRows` as tagged `doc` rows, plus a `close` for `closeShard`. */
+  private def tagged(docRows: org.apache.spark.sql.DataFrame, closeShard: Option[Long]) = {
+    val d = docRows.select(lit("doc").as("kind"), col("shard_id"), col("doc_id"),
+      col("text"), col("lang"), lit(0L).as("n_docs"))
+    closeShard match {
+      case Some(sid) => d.unionByName(
+        Seq(("close", sid, 0L, null: String, null: String, 0L))
+          .toDF("kind", "shard_id", "doc_id", "text", "lang", "n_docs"))
+      case None => d
+    }
+  }
+
   test("crash replay of a committed ingest batch lands nothing (docs, state, curated)") {
     val base = Files.createTempDirectory("graft_ci_replay").toFile.getAbsolutePath
-    val docs = Tables.documents(spark, sfTiny)
-      .withColumn("shard_id", floor(col("doc_id") / K))
-      .filter(col("shard_id") === 0)
-      .select("shard_id", "doc_id", "text", "lang")
-    def tagged(docRows: org.apache.spark.sql.DataFrame, closeShard: Option[Long]) = {
-      val d = docRows.select(lit("doc").as("kind"), col("shard_id"), col("doc_id"),
-        col("text"), col("lang"), lit(0L).as("n_docs"))
-      closeShard match {
-        case Some(sid) => d.unionByName(
-          Seq(("close", sid, 0L, null: String, null: String, 0L))
-            .toDF("kind", "shard_id", "doc_id", "text", "lang", "n_docs"))
-        case None => d
-      }
-    }
+    val docs = shard0
     // batch 0 lands shard 0's docs; batch 1 closes (and curates) it
     CurationIngest.handleBatch(spark, tagged(docs, None), base, Some(0L))
     CurationIngest.handleBatch(spark, tagged(docs.limit(0), Some(0L)), base, Some(1L))
@@ -125,5 +130,24 @@ class CurationIngestSpec extends SparkTestBase with Matchers {
       .collect().map(_.toString).sorted.toSeq shouldBe curated
     CurationIngest.readLanding(spark, base).count() shouldBe landed
     CurationIngest.committedBatch(spark, base) shouldBe Some(1L)
+  }
+
+  test("an ambiguous CAS on the ingest publish (rename landed, reported failure) still commits") {
+    FaultInjectingFileSystem.install(spark)
+    FaultInjectingFileSystem.reset()
+    val batch = tagged(shard0, Some(0L)) // land and close shard 0 in one batch
+    val clean = Files.createTempDirectory("graft_ci_cas_clean").toFile.getAbsolutePath
+    CurationIngest.handleBatch(spark, batch, clean, Some(0L))
+    val want = CurationIngest.readCurated(spark, clean).collect().map(_.toString).sorted.toSeq
+    want should not be empty
+
+    val fault = "graftfault://" +
+      Files.createTempDirectory("graft_ci_cas_fault").toFile.getAbsolutePath
+    FaultInjectingFileSystem.renameLieOnce("/log/v0")
+    CurationIngest.handleBatch(spark, batch, fault, Some(0L))
+    FaultInjectingFileSystem.fired.map(_._1) should contain("renameLie")
+    FaultInjectingFileSystem.reset()
+    CurationIngest.committedBatch(spark, fault) shouldBe Some(0L)
+    CurationIngest.readCurated(spark, fault).collect().map(_.toString).sorted.toSeq shouldBe want
   }
 }

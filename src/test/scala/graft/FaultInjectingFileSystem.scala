@@ -19,11 +19,15 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
   *     on the pattern).
   *   - failDeleteOnce(substr): the next delete whose path contains substr
   *     throws — a crash during deferred GC of folded segment dirs.
+  *   - delayCreateOnce(substr, ms): the next create whose path contains
+  *     substr sleeps ms first — a slow sibling writer still running when
+  *     another write of the same commit fails.
   *
   * Schedules are one-shot and recorded; a spec must assert `fired`, or it
   * silently tested nothing. Registered via `fs.graftfault.impl` +
   * `fs.AbstractFileSystem.graftfault.impl` (FileSystem instances are
-  * cached per scheme, hence the static schedule).
+  * cached per scheme, hence the static schedule); [[FaultInjectingFileSystem.install]]
+  * sets both keys on a session.
   */
 class FaultInjectingFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "graftfault"
@@ -40,16 +44,22 @@ class FaultInjectingFileSystem extends RawLocalFileSystem {
   override def create(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission,
       overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
       progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
-    if (FaultInjectingFileSystem.take("failCreate", f.toUri.getPath))
-      throw new java.io.IOException(s"injected create failure at $f")
+    beforeCreate(f)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    beforeCreate(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  private def beforeCreate(f: Path): Unit = {
+    FaultInjectingFileSystem.takeKey("delayCreate", f.toUri.getPath)
+      .flatMap(k => Option(FaultInjectingFileSystem.delays.get(k)))
+      .foreach(ms => Thread.sleep(ms))
     if (FaultInjectingFileSystem.take("failCreate", f.toUri.getPath))
       throw new java.io.IOException(s"injected create failure at $f")
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 
   override def delete(p: Path, recursive: Boolean): Boolean = {
@@ -68,17 +78,29 @@ object FaultInjectingFileSystem {
   private val scheduled = new ConcurrentHashMap[(String, String), AtomicInteger]()
   private val firedLog = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
-  private[graft] def take(kind: String, path: String): Boolean = {
+  private[graft] val delays = new ConcurrentHashMap[String, java.lang.Long]()
+
+  /** Consume one scheduled `kind` fault matching `path`; the matched substr. */
+  private[graft] def takeKey(kind: String, path: String): Option[String] = {
     val it = scheduled.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       val (k, substr) = e.getKey
       if (k == kind && path.contains(substr) && e.getValue.getAndDecrement() > 0) {
         synchronized { firedLog += ((kind, path)); () }
-        return true
+        return Some(substr)
       }
     }
-    false
+    None
+  }
+
+  private[graft] def take(kind: String, path: String): Boolean = takeKey(kind, path).isDefined
+
+  /** Register the `graftfault` scheme on the session's Hadoop config. */
+  def install(s: org.apache.spark.sql.SparkSession): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfault.impl", classOf[FaultInjectingFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.graftfault.impl", classOf[FaultInjectingAbstractFs].getName)
   }
 
   def renameLieOnce(substr: String): Unit =
@@ -87,8 +109,12 @@ object FaultInjectingFileSystem {
     scheduled.put(("failCreate", substr), new AtomicInteger(1)): Unit
   def failDeleteOnce(substr: String): Unit =
     scheduled.put(("failDelete", substr), new AtomicInteger(1)): Unit
+  def delayCreateOnce(substr: String, ms: Long): Unit = {
+    delays.put(substr, ms)
+    scheduled.put(("delayCreate", substr), new AtomicInteger(1)): Unit
+  }
 
-  def reset(): Unit = { scheduled.clear(); synchronized { firedLog.clear() } }
+  def reset(): Unit = { scheduled.clear(); delays.clear(); synchronized { firedLog.clear() } }
   def fired: Seq[(String, String)] = synchronized { firedLog.toVector }
   def pending: Int = {
     var n = 0

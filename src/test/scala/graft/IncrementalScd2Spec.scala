@@ -57,4 +57,36 @@ class IncrementalScd2Spec extends SparkTestBase with Matchers {
     graft.streaming.IncrementalScd2.readDimension(spark, base).count() shouldBe once
     new java.io.File(s"$base/closed").listFiles().length shouldBe 1
   }
+
+  test("a failed current-table write leaks none of its batch's closed versions; the replay converges") {
+    FaultInjectingFileSystem.install(spark)
+    FaultInjectingFileSystem.reset()
+    val ev = Tables.events(spark, sfTiny)
+      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"),
+        expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
+          .as("us"))
+    val mid = ev.selectExpr("percentile_approx(us, 0.5, 10000)").head.getLong(0)
+    val batches = Seq(ev.filter(col("us") <= mid), ev.filter(col("us") > mid))
+    def dimension(base: String) =
+      IncrementalScd2.readDimension(spark, base).collect().map(_.toString).toSeq
+    val clean = Files.createTempDirectory("graft_incscd2_clean").toFile.getAbsolutePath
+    IncrementalScd2.processBatch(spark, batches(0), clean, Some(0L))
+    val afterBatch0 = dimension(clean)
+    IncrementalScd2.processBatch(spark, batches(1), clean, Some(1L))
+    val want = dimension(clean)
+    want.length should be > afterBatch0.length
+
+    val faultDir = Files.createTempDirectory("graft_incscd2_fault").toFile.getAbsolutePath
+    val fault = s"graftfault://$faultDir"
+    IncrementalScd2.processBatch(spark, batches(0), fault, Some(0L))
+    FaultInjectingFileSystem.failCreateOnce("/current/v1/")
+    intercept[Exception] { IncrementalScd2.processBatch(spark, batches(1), fault, Some(1L)) }
+    FaultInjectingFileSystem.fired.map(_._1) should contain("failCreate")
+    FaultInjectingFileSystem.reset()
+    // batch 1's closed segment may be on disk, but the pointer still says v0
+    new java.io.File(s"$faultDir/closed/b1").exists() shouldBe true
+    dimension(fault) shouldBe afterBatch0
+    IncrementalScd2.processBatch(spark, batches(1), fault, Some(1L))
+    dimension(fault) shouldBe want
+  }
 }

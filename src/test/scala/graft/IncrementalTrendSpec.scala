@@ -53,4 +53,42 @@ class IncrementalTrendSpec extends SparkTestBase with Matchers {
     new java.io.File(base).listFiles().count(_.getName.startsWith("v")) shouldBe 3
     rows(IncrementalTrend.serveTrend(spark, base)) shouldBe t
   }
+
+  test("a failed grain write settles every sibling write before processBatch throws; the replay converges") {
+    FaultInjectingFileSystem.install(spark)
+    FaultInjectingFileSystem.reset()
+    val batch = (i: Int) => rawRows.filter(abs(hash(col("event_id"))) % 2 === i)
+    val clean = Files.createTempDirectory("graft_inctrend_clean").toFile.getAbsolutePath
+    val faultDir = Files.createTempDirectory("graft_inctrend_fault").toFile.getAbsolutePath
+    val fault = s"graftfault://$faultDir"
+    for (i <- 0 until 2) IncrementalTrend.processBatch(spark, batch(i), clean, Some(i.toLong))
+    IncrementalTrend.processBatch(spark, batch(0), fault, Some(0L))
+
+    // batch 1: the slopes write fails while the users write is still
+    // sleeping in its first create
+    FaultInjectingFileSystem.failCreateOnce("/v1/slopes/")
+    FaultInjectingFileSystem.delayCreateOnce("/v1/users/", 6000L)
+    intercept[Exception] { IncrementalTrend.processBatch(spark, batch(1), fault, Some(1L)) }
+    // the delayed sibling already committed its output when the failure
+    // surfaced, and no write job is left running (the status store trails
+    // job ends by a listener-bus hop, far below the 6 s delay)
+    new java.io.File(s"$faultDir/v1/users/_SUCCESS").exists() shouldBe true
+    val settled = System.currentTimeMillis() + 2000
+    while (spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty
+      && System.currentTimeMillis() < settled) Thread.sleep(20)
+    spark.sparkContext.statusTracker.getActiveJobIds shouldBe empty
+    FaultInjectingFileSystem.fired.map(_._1).toSet shouldBe Set("failCreate", "delayCreate")
+    IncrementalTrend.committedBatch(spark, fault) shouldBe Some(0L)
+    FaultInjectingFileSystem.reset()
+
+    IncrementalTrend.processBatch(spark, batch(1), fault, Some(1L))
+    IncrementalTrend.committedBatch(spark, fault) shouldBe Some(1L)
+    val surfaces = Seq[String => DataFrame](
+      IncrementalTrend.serveTrend(spark, _), IncrementalTrend.serveRfm(spark, _),
+      IncrementalTrend.readHourly(spark, _), IncrementalTrend.readSlopes(spark, _),
+      IncrementalTrend.readSlopesCum(spark, _), IncrementalTrend.readUsers(spark, _),
+      IncrementalTrend.readVals(spark, _), IncrementalTrend.readMoments(spark, _))
+    for (read <- surfaces)
+      rows(read(fault)).sorted shouldBe rows(read(clean)).sorted
+  }
 }
